@@ -132,43 +132,20 @@ def _unionall_branches(q) -> list | None:
     return [q]
 
 
-def _walk_ast(node):
-    yield node
-    for f in getattr(node, "__dataclass_fields__", {}):
-        v = getattr(node, f)
-        items = v if isinstance(v, list) else [v]
-        for x in items:
-            if isinstance(x, tuple):
-                for y in x:
-                    if hasattr(y, "__dataclass_fields__"):
-                        yield from _walk_ast(y)
-            elif hasattr(x, "__dataclass_fields__"):
-                yield from _walk_ast(x)
-
-
 def _has_subquery(node) -> bool:
     """Any subquery construct inside an expression tree (their value
     depends on whole-table state, so a per-insert delta through them
     would be silently wrong)."""
-    if isinstance(
-        node, (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
-    ):
-        return True
-    for f in getattr(node, "__dataclass_fields__", {}):
-        v = getattr(node, f, None)
-        if isinstance(v, list):
-            for x in v:
-                if isinstance(x, tuple):
-                    if any(
-                        hasattr(y, "__dataclass_fields__") and _has_subquery(y)
-                        for y in x
-                    ):
-                        return True
-                elif hasattr(x, "__dataclass_fields__") and _has_subquery(x):
-                    return True
-        elif hasattr(v, "__dataclass_fields__") and _has_subquery(v):
-            return True
-    return False
+    return any(
+        isinstance(
+            n, (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
+        )
+        for n in A.walk(node)
+    )
+
+
+def _referenced_tables(node) -> set[str]:
+    return {n.name for n in A.walk(node) if isinstance(n, A.TableRef)}
 
 
 def _branch_delta_ok(b) -> bool:
@@ -212,7 +189,7 @@ def _branch_delta_ok(b) -> bool:
         if j.kind != "inner" or not isinstance(j.source, A.TableRef):
             return False
     refs: dict[str, int] = {}
-    for node in _walk_ast(b):
+    for node in A.walk(b):
         if isinstance(node, A.TableRef):
             refs[node.name] = refs.get(node.name, 0) + 1
         if isinstance(node, (A.Exists, A.InSubquery, A.ScalarSubquery)):
@@ -252,6 +229,18 @@ class Catalog:
     def _save_meta(self, name: str, meta: dict) -> None:
         with open(self._meta_path(name), "w") as f:
             json.dump(meta, f, indent=1)
+
+    def entries(self):
+        """Metadata of every catalog object, in name order."""
+        for f in sorted(os.listdir(self.root)):
+            if f.endswith(".json"):
+                meta = self._load_meta(f[:-5])
+                if meta is not None:
+                    yield meta
+
+    def stamp(self) -> int:
+        """Changes whenever an object is created, dropped or renamed."""
+        return os.stat(self.root).st_mtime_ns
 
     def has_table(self, name: str) -> bool:
         m = self._load_meta(name)
@@ -713,18 +702,13 @@ class Catalog:
             )
         return violations
 
-    def _referenced_tables(self, node, out: set[str]) -> None:
-        if isinstance(node, A.TableRef):
-            out.add(node.name)
-            return
-        if isinstance(node, (str, int, float, bool, bytes)) or node is None:
-            return
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                self._referenced_tables(x, out)
-            return
-        for f in getattr(node, "__dataclass_fields__", {}):
-            self._referenced_tables(getattr(node, f), out)
+    def _dependent_views(self, table: str):
+        """(metadata, defining query) of every view that reads `table`."""
+        for meta in self.entries():
+            if meta["type"] == "view":
+                q = _unpickle_ast(meta["query"])
+                if table in _referenced_tables(q):
+                    yield meta, q
 
     def _refresh_dependent_views(
         self, table: str, low, delta=None
@@ -737,53 +721,23 @@ class Catalog:
         callable returning the insert's rows (or None) — evaluated only
         if an incremental view needs it, so plain inserts pay nothing."""
         delta_df: DataFrame | None | bool = False  # False = not built yet
-        for f in os.listdir(self.root):
-            if not f.endswith(".json"):
+        for meta, _q in self._dependent_views(table):
+            if meta.get("maintenance") == "incremental" and delta is not None:
+                if delta_df is False:
+                    delta_df = delta()
+                if delta_df is not None:
+                    self._delta_merge_view(meta, table, delta_df, low)
                 continue
-            meta = self._load_meta(f[:-5])
-            if meta and meta["type"] == "view":
-                refs: set[str] = set()
-                self._referenced_tables(_unpickle_ast(meta["query"]), refs)
-                if table not in refs:
-                    continue
-                if meta.get("maintenance") == "incremental" and delta is not None:
-                    if delta_df is False:
-                        delta_df = delta()
-                    if delta_df is not None:
-                        self._delta_merge_view(meta, table, delta_df, low)
-                    continue
-                self.refresh_view(meta["name"], low)
-
-    def _rename_refs(self, node, old: str, new: str) -> None:
-        if isinstance(node, A.TableRef):
-            if node.name == old:
-                node.name = new
-            return
-        if isinstance(node, (str, int, float, bool, bytes)) or node is None:
-            return
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                self._rename_refs(x, old, new)
-            return
-        for f in getattr(node, "__dataclass_fields__", {}):
-            self._rename_refs(getattr(node, f), old, new)
+            self.refresh_view(meta["name"], low)
 
     def _rename_in_views(self, old: str, new: str) -> None:
         """Follow a table rename through every dependent view's stored
         query AST (ALTER … RENAME would otherwise orphan the views:
         refreshes and delta merges resolve by name)."""
-        for f in os.listdir(self.root):
-            if not f.endswith(".json"):
-                continue
-            meta = self._load_meta(f[:-5])
-            if not meta or meta["type"] != "view":
-                continue
-            refs: set[str] = set()
-            q = _unpickle_ast(meta["query"])
-            self._referenced_tables(q, refs)
-            if old not in refs:
-                continue
-            self._rename_refs(q, old, new)
+        for meta, q in self._dependent_views(old):
+            for n in A.walk(q):
+                if isinstance(n, A.TableRef) and n.name == old:
+                    n.name = new
             meta["query"] = _pickle_ast(q)
             self._save_meta(meta["name"], meta)
 
@@ -795,16 +749,7 @@ class Catalog:
         in the view forever and reads would be silently wrong. Rebuild
         incremental state from the full query; re-run full-refresh
         views for read-consistency before the next insert."""
-        for f in os.listdir(self.root):
-            if not f.endswith(".json"):
-                continue
-            meta = self._load_meta(f[:-5])
-            if not meta or meta["type"] != "view":
-                continue
-            refs: set[str] = set()
-            self._referenced_tables(_unpickle_ast(meta["query"]), refs)
-            if table not in refs:
-                continue
+        for meta, _q in self._dependent_views(table):
             if meta.get("maintenance") == "incremental":
                 self._rebuild_incremental(meta, low)
             else:
@@ -1113,9 +1058,7 @@ class Catalog:
         low2 = Lowerer(self.spark, resolve, low.params)
         parts = []
         for b in branches:
-            refs: set[str] = set()
-            self._referenced_tables(b, refs)
-            if table in refs:
+            if table in _referenced_tables(b):
                 parts.append(low2.lower_query(b))
         if not parts:
             return
@@ -1255,11 +1198,7 @@ class Catalog:
 
     def describe(self, stmt: A.DescribeStmt, engine) -> DataFrame:
         if stmt.entity == "database":
-            rows = []
-            for f in sorted(os.listdir(self.root)):
-                if f.endswith(".json"):
-                    m = self._load_meta(f[:-5])
-                    rows.append((m["name"], m["type"]))
+            rows = [(m["name"], m["type"]) for m in self.entries()]
             return self.spark.createDataFrame(
                 rows or [("", "")], "name: string, type: string"
             )
@@ -1516,73 +1455,40 @@ class Catalog:
         if src_name is not None:
             s_names.add(src_name)
 
-        def rw(node):
-            node = _copy.deepcopy(node)
-
-            def walk(e):
-                if isinstance(e, A.Ident):
-                    if e.qualifier in s_names:
-                        if e.name not in scols:
-                            raise CatalogError(
-                                f"unknown source column {e.name!r}"
-                            )
-                        return A.Ident(pfx + e.name, None)
-                    if e.qualifier in t_names:
-                        if e.name not in tcols:
-                            raise CatalogError(
-                                f"unknown target column {e.name!r}"
-                            )
-                        return A.Ident(e.name, None)
-                    if e.qualifier is None:
-                        if e.name in tcols and e.name in scols:
-                            raise CatalogError(
-                                f"ambiguous MERGE column {e.name!r}: "
-                                "qualify it with the target or source "
-                                "alias"
-                            )
-                        if e.name in scols:
-                            return A.Ident(pfx + e.name, None)
-                        return e
-                    return e
-                if not hasattr(e, "__dataclass_fields__"):
-                    return e
-                for f in e.__dataclass_fields__:
-                    v = getattr(e, f)
-                    if isinstance(v, list):
-                        setattr(
-                            e, f,
-                            [walk(x) if hasattr(
-                                x, "__dataclass_fields__"
-                            ) else x for x in v],
-                        )
-                    elif hasattr(v, "__dataclass_fields__"):
-                        setattr(e, f, walk(v))
-                return e
-
-            return walk(node)
-
-        def _refs_source(e) -> bool:
+        def rw(e):
             if isinstance(e, A.Ident):
-                return e.qualifier is None and e.name.startswith(pfx)
-            if not hasattr(e, "__dataclass_fields__"):
-                return False
-            for f in e.__dataclass_fields__:
-                v = getattr(e, f)
-                if isinstance(v, list):
-                    if any(
-                        _refs_source(x)
-                        for x in v
-                        if hasattr(x, "__dataclass_fields__")
-                    ):
-                        return True
-                elif hasattr(v, "__dataclass_fields__"):
-                    if _refs_source(v):
-                        return True
-            return False
+                if e.qualifier in s_names:
+                    if e.name not in scols:
+                        raise CatalogError(
+                            f"unknown source column {e.name!r}"
+                        )
+                    return A.Ident(pfx + e.name, None)
+                if e.qualifier in t_names:
+                    if e.name not in tcols:
+                        raise CatalogError(
+                            f"unknown target column {e.name!r}"
+                        )
+                    return A.Ident(e.name, None)
+                if e.qualifier is None:
+                    if e.name in tcols and e.name in scols:
+                        raise CatalogError(
+                            f"ambiguous MERGE column {e.name!r}: "
+                            "qualify it with the target or source "
+                            "alias"
+                        )
+                    if e.name in scols:
+                        return A.Ident(pfx + e.name, None)
+                return e
+            return A.transform(e, rw)
 
         def compile_(node, forbid_source: bool = False) -> Column:
-            r = rw(node)
-            if forbid_source and _refs_source(r):
+            r = rw(_copy.deepcopy(node))
+            if forbid_source and any(
+                isinstance(n, A.Ident)
+                and n.qualifier is None
+                and n.name.startswith(pfx)
+                for n in A.walk(r)
+            ):
                 raise CatalogError(
                     "WHEN NOT MATCHED BY SOURCE expressions may reference "
                     "target columns only"
@@ -1869,9 +1775,9 @@ def _pickle_ast(node) -> str:
 
 def _upgrade_ast(node, _seen=None):
     """Fill dataclass fields added AFTER a pickled AST was persisted
-    with their declared defaults, so every walker (getattr over
-    __dataclass_fields__) keeps working on catalogs written by older
-    engine versions."""
+    with their declared defaults, so field reads (the ast_nodes
+    traversal and every lowering) keep working on catalogs written by
+    older engine versions."""
     import dataclasses
 
     if _seen is None:

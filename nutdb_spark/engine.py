@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from nutdb_spark.frontend import ast_nodes as A
 from nutdb_spark.frontend.lower import Lowerer, LoweringError
 from nutdb_spark.frontend.parser import parse
+from nutdb_spark.functions.registry import NONDETERMINISTIC_FNS
 from nutdb_spark.sources.tables import TABLES, load_table
 
 
@@ -92,22 +93,18 @@ class NutEngine:
         # the scan fires on every GROUP BY statement — cache on the
         # catalog directory's mtime (any CREATE/DROP touches it)
         try:
-            stamp = os.stat(self.catalog.root).st_mtime_ns
+            stamp = self.catalog.stamp()
         except OSError:
             return []
         cached = getattr(self, "_rw_views_cache", None)
         if cached is not None and cached[0] == stamp:
             return cached[1]
-        out = []
-        for f in sorted(os.listdir(self.catalog.root)):
-            if f.endswith(".json"):
-                m = self.catalog._load_meta(f[:-5])
-                if (
-                    m
-                    and m.get("type") == "view"
-                    and m.get("strategy") in ("summing", "aggregating")
-                ):
-                    out.append(m)
+        out = [
+            m
+            for m in self.catalog.entries()
+            if m["type"] == "view"
+            and m.get("strategy") in ("summing", "aggregating")
+        ]
         self._rw_views_cache = (stamp, out)
         return out
 
@@ -150,65 +147,32 @@ class NutEngine:
             mapping[base_col] = alias or base_col
         return vq.from_.source.name, mapping
 
-    # Nondeterministic functions can never appear in a rewritten
-    # predicate: the view holds MERGED rows, so `WHERE rand() < 0.5`
-    # would filter merged rows instead of base rows — a different
-    # result distribution, not just a different sample.
-    _NONDET_FNS = frozenset(
-        {
-            "rand", "random", "randcanonical", "randconstant",
-            "randuniform", "randnormal", "uuid", "generateuuidv4",
-            "now", "now64", "today", "yesterday",
-            "currenttimestamp", "current_timestamp",
-            "randomstring", "randomprintableascii",
-            "monotonically_increasing_id", "rownumberinallblocks",
-        }
-    )
-
     @staticmethod
     def _where_idents(node, acc: set) -> bool:
         """Collect unqualified Ident names; False on anything a key
         predicate can't contain (subqueries, window calls,
-        nondeterministic function calls)."""
-        import dataclasses as _dc
-
-        if isinstance(node, A.Ident):
-            if node.qualifier:
+        nondeterministic function calls — the view holds MERGED rows,
+        so `WHERE rand() < 0.5` would filter merged rows instead of
+        base rows)."""
+        for n in A.walk(node):
+            if isinstance(n, A.Ident):
+                if n.qualifier:
+                    return False
+                acc.add(n.name)
+            elif isinstance(
+                n, (A.ScalarSubquery, A.InSubquery, A.Exists, A.WindowCall)
+            ) or (
+                isinstance(n, A.FnCall)
+                and n.name.lower() in NONDETERMINISTIC_FNS
+            ):
                 return False
-            acc.add(node.name)
-            return True
-        if isinstance(
-            node, (A.ScalarSubquery, A.InSubquery, A.Exists, A.WindowCall)
-        ):
-            return False
-        if (
-            isinstance(node, A.FnCall)
-            and node.name.lower() in NutEngine._NONDET_FNS
-        ):
-            return False
-        if _dc.is_dataclass(node):
-            return all(
-                NutEngine._where_idents(getattr(node, f.name), acc)
-                for f in _dc.fields(node)
-            )
-        if isinstance(node, (list, tuple)):
-            return all(NutEngine._where_idents(x, acc) for x in node)
         return True
 
     @staticmethod
     def _rename_idents(node, ren: dict):
-        import dataclasses as _dc
-
-        if isinstance(node, A.Ident):
-            if node.name in ren:
-                node.name = ren[node.name]
-            return
-        if _dc.is_dataclass(node):
-            for f in _dc.fields(node):
-                NutEngine._rename_idents(getattr(node, f.name), ren)
-        elif isinstance(node, (list, tuple)):
-            for x in node:
-                NutEngine._rename_idents(x, ren)
+        for n in A.walk(node):
+            if isinstance(n, A.Ident) and n.name in ren:
+                n.name = ren[n.name]
 
     def _try_projection_rewrite(self, q):
         """Rewrite `SELECT k…, agg(v)… FROM base [WHERE on keys] GROUP
@@ -378,13 +342,10 @@ class NutEngine:
     # --- entry ------------------------------------------------------------
 
     def _list_tables(self) -> list[str]:
-        names = set(TABLES)
-        for f in os.listdir(self.catalog.root):
-            if f.endswith(".json"):
-                m = self.catalog._load_meta(f[:-5])
-                if m and m.get("type") == "table":
-                    names.add(m["name"])
-        return sorted(names)
+        return sorted(
+            set(TABLES)
+            | {m["name"] for m in self.catalog.entries() if m["type"] == "table"}
+        )
 
     def sql(self, text: str, params: list | None = None):
         stmt = parse(text)
@@ -601,8 +562,6 @@ class NutEngine:
         SHOW CREATE TABLE — DDL reconstructed from the sidecar
         metadata (type names are the catalog's stored dialect names;
         CTAS tables print their derived schema)."""
-        import os
-
         if stmt.entity == "create":
             meta = self.catalog._load_meta(stmt.name)
             if meta is None:
@@ -613,12 +572,11 @@ class NutEngine:
             return self.spark.createDataFrame(
                 [(stmt.name, ddl)], "name: string, create_query: string"
             )
-        rows = []
-        for f in sorted(os.listdir(self.catalog.root)):
-            if f.endswith(".json"):
-                m = self.catalog._load_meta(f[:-5])
-                if stmt.entity == "database" or m["type"] == stmt.entity:
-                    rows.append((m["name"], m["type"]))
+        rows = [
+            (m["name"], m["type"])
+            for m in self.catalog.entries()
+            if stmt.entity == "database" or m["type"] == stmt.entity
+        ]
         return self.spark.createDataFrame(rows, "name: string, type: string")
 
 

@@ -575,3 +575,54 @@ class BackupStmt:
     name: str
     path: str
     restore: bool = False
+
+
+# --- traversal ------------------------------------------------------------
+# The one definition of "child node": a dataclass value held by a field,
+# directly or inside list/tuple containers at any depth (Case.whens,
+# MapLit.entries, OrderItem.fill, ValuesTable.rows, MergeStmt clauses).
+# Callers that must stop early (at subqueries, lambdas, window calls)
+# recurse over children() themselves and keep their own stopping rules.
+
+
+def _is_node(x) -> bool:
+    return hasattr(x, "__dataclass_fields__")
+
+
+def _nodes_in(value):
+    if _is_node(value):
+        yield value
+    elif isinstance(value, (list, tuple)):
+        for x in value:
+            yield from _nodes_in(x)
+
+
+def children(node):
+    """The direct child nodes of `node`, in field order."""
+    for f in getattr(node, "__dataclass_fields__", ()):
+        yield from _nodes_in(getattr(node, f))
+
+
+def walk(node):
+    """Pre-order: `node`, then every node below it."""
+    yield node
+    for c in children(node):
+        yield from walk(c)
+
+
+def _mapped(value, fn):
+    if _is_node(value):
+        return fn(value)
+    if isinstance(value, list):
+        return [_mapped(x, fn) for x in value]
+    if isinstance(value, tuple):
+        return tuple(_mapped(x, fn) for x in value)
+    return value
+
+
+def transform(node, fn):
+    """Replace each direct child `c` of `node` with `fn(c)`, in place,
+    keeping lists as lists and tuples as tuples; returns `node`."""
+    for f in getattr(node, "__dataclass_fields__", ()):
+        setattr(node, f, _mapped(getattr(node, f), fn))
+    return node

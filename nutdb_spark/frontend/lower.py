@@ -32,6 +32,7 @@ from nutdb_spark.frontend import ast_nodes as A
 from nutdb_spark.functions import textfns as _textfns  # noqa: F401 — registers [EXT] names
 from nutdb_spark.functions.registry import (
     AGGREGATE_FNS,
+    NONDETERMINISTIC_FNS,
     PARAMETRIC_AGGS,
     SCALAR_FNS,
 )
@@ -796,7 +797,7 @@ class Lowerer:
             "where", "prewhere", "having", "qualify", "limit", "offset"
         ):
             v = getattr(q, f, None)
-            if v is not None and hasattr(v, "__dataclass_fields__"):
+            if v is not None:
                 setattr(q, f, self._subst_expr(v, bound))
         new_cols = []
         for e, a in q.columns:
@@ -820,40 +821,6 @@ class Lowerer:
         for j in q.joins:
             if getattr(j, "on", None) is not None:
                 j.on = self._subst_expr(j.on, bound)
-
-    # scalar generators whose per-row value must not be shared between
-    # occurrences (and must never be collapsed): never CSE a subtree
-    # containing one
-    _CSE_NONDET = frozenset(
-        {
-            "rand",
-            "rand64",
-            "randcanonical",
-            "randuniform",
-            "randnormal",
-            "random",
-            "uuid",
-            "generateuuidv4",
-            "now",
-            "today",
-            "yesterday",
-        }
-    )
-
-    @staticmethod
-    def _ast_children(node):
-        for f in node.__dataclass_fields__:
-            v = getattr(node, f)
-            if hasattr(v, "__dataclass_fields__"):
-                yield v
-            elif isinstance(v, list):
-                for x in v:
-                    if isinstance(x, tuple):
-                        for y in x:
-                            if hasattr(y, "__dataclass_fields__"):
-                                yield y
-                    elif hasattr(x, "__dataclass_fields__"):
-                        yield x
 
     def _bind_common_subexprs(self, sel_items, base, scope):
         """[OPT r13] Common-subexpression binding for plain
@@ -889,7 +856,7 @@ class Lowerer:
                     and n.name.lower() == "columns"
                 ):
                     return sel_items, base
-                blockers.extend(self._ast_children(n))
+                blockers.extend(A.children(n))
 
         _SUBQ = (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
 
@@ -899,15 +866,15 @@ class Lowerer:
             if isinstance(n, _SUBQ):
                 return False
             if isinstance(n, A.Lambda):
-                for c in self._ast_children(n):
+                for c in A.children(n):
                     collect(c, counts, reps, True)
                 return True  # self-contained: doesn't poison parents
             clean = True
-            for c in self._ast_children(n):
+            for c in A.children(n):
                 if not collect(c, counts, reps, in_lambda):
                     clean = False
             if isinstance(n, A.FnCall):
-                if n.name.lower() in self._CSE_NONDET:
+                if n.name.lower() in NONDETERMINISTIC_FNS:
                     return False
                 if clean and not in_lambda:
                     try:
@@ -927,33 +894,7 @@ class Lowerer:
                         return A.Ident(name=name)
                 except Exception:  # noqa: BLE001
                     pass
-            if not hasattr(n, "__dataclass_fields__"):
-                return n
-            for f in n.__dataclass_fields__:
-                v = getattr(n, f)
-                if hasattr(v, "__dataclass_fields__"):
-                    setattr(n, f, subst(v, key, name))
-                elif isinstance(v, list):
-                    setattr(
-                        n,
-                        f,
-                        [
-                            tuple(
-                                subst(y, key, name)
-                                if hasattr(y, "__dataclass_fields__")
-                                else y
-                                for y in x
-                            )
-                            if isinstance(x, tuple)
-                            else (
-                                subst(x, key, name)
-                                if hasattr(x, "__dataclass_fields__")
-                                else x
-                            )
-                            for x in v
-                        ],
-                    )
-            return n
+            return A.transform(n, lambda c: subst(c, key, name))
 
         items = None
         for _ in range(8):  # largest-first, re-counted per round
@@ -998,37 +939,8 @@ class Lowerer:
             return node
         if isinstance(node, A.Lambda):
             # lambda parameters shadow WITH aliases inside the body
-            inner = {k: v for k, v in bound.items() if k not in node.params}
-            if hasattr(node.body, "__dataclass_fields__"):
-                node.body = self._subst_expr(node.body, inner)
-            return node
-        if not hasattr(node, "__dataclass_fields__"):
-            return node
-        for f in node.__dataclass_fields__:
-            v = getattr(node, f)
-            if isinstance(v, list):
-                setattr(
-                    node,
-                    f,
-                    [
-                        tuple(
-                            self._subst_expr(y, bound)
-                            if hasattr(y, "__dataclass_fields__")
-                            else y
-                            for y in x
-                        )
-                        if isinstance(x, tuple)
-                        else (
-                            self._subst_expr(x, bound)
-                            if hasattr(x, "__dataclass_fields__")
-                            else x
-                        )
-                        for x in v
-                    ],
-                )
-            elif hasattr(v, "__dataclass_fields__"):
-                setattr(node, f, self._subst_expr(v, bound))
-        return node
+            bound = {k: v for k, v in bound.items() if k not in node.params}
+        return A.transform(node, lambda c: self._subst_expr(c, bound))
 
     def _lower_cte(self, c: A.Cte, outer) -> DataFrame:
         """A later CTE sees every earlier one (the frame is already on
@@ -2025,47 +1937,30 @@ class Lowerer:
         None (no column references — a literal). Mixed references or
         columns resolvable on neither side raise."""
         sides: set[str] = set()
-
-        def walk(node):
-            if isinstance(node, A.Ident):
-                if node.qualifier is not None:
-                    if node.qualifier == alias:
-                        sides.add("r")
-                    elif node.qualifier in left_aliases:
-                        sides.add("l")
-                    else:
-                        raise LoweringError(
-                            f"unknown alias {node.qualifier!r} in ASOF ON"
-                        )
+        for node in A.walk(e):
+            if not isinstance(node, A.Ident):
+                continue
+            if node.qualifier is not None:
+                if node.qualifier == alias:
+                    sides.add("r")
+                elif node.qualifier in left_aliases:
+                    sides.add("l")
                 else:
-                    in_l = node.name in base.columns
-                    in_r = node.name in right.columns
-                    if in_l and in_r:
-                        raise LoweringError(
-                            f"ambiguous column {node.name!r} in ASOF ON — qualify it"
-                        )
-                    if not (in_l or in_r):
-                        raise LoweringError(
-                            f"unknown column {node.name!r} in ASOF ON"
-                        )
-                    sides.add("l" if in_l else "r")
-                return
-            if isinstance(node, (A.Lit, A.Param, A.Interval)):
-                return
-            for f in getattr(node, "__dataclass_fields__", {}):
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    for x in v:
-                        if isinstance(x, tuple):
-                            for y in x:
-                                if hasattr(y, "__dataclass_fields__"):
-                                    walk(y)
-                        elif hasattr(x, "__dataclass_fields__"):
-                            walk(x)
-                elif hasattr(v, "__dataclass_fields__"):
-                    walk(v)
-
-        walk(e)
+                    raise LoweringError(
+                        f"unknown alias {node.qualifier!r} in ASOF ON"
+                    )
+            else:
+                in_l = node.name in base.columns
+                in_r = node.name in right.columns
+                if in_l and in_r:
+                    raise LoweringError(
+                        f"ambiguous column {node.name!r} in ASOF ON — qualify it"
+                    )
+                if not (in_l or in_r):
+                    raise LoweringError(
+                        f"unknown column {node.name!r} in ASOF ON"
+                    )
+                sides.add("l" if in_l else "r")
         if len(sides) > 1:
             raise LoweringError(
                 "an ASOF ON operand may not mix columns from both sides"
@@ -2138,34 +2033,15 @@ class Lowerer:
         return base.join(df, cond, how)
 
     def _refs_outer(self, e, inner_cols: set[str], sub_scope: Scope) -> bool:
-        inner_aliases = set(sub_scope.frames)
-        found = False
-
-        def walk(node):
-            nonlocal found
-            if isinstance(node, A.Ident):
-                if node.qualifier is not None:
-                    if node.qualifier not in inner_aliases:
-                        found = True
-                elif node.name not in inner_cols:
-                    found = True
-                return
-            if isinstance(node, (A.Lit, A.Param, A.Interval, A.Wildcard)):
-                return
-            for f in getattr(node, "__dataclass_fields__", {}):
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    for x in v:
-                        if isinstance(x, tuple):
-                            for y in x:
-                                walk(y)
-                        else:
-                            walk(x)
-                else:
-                    walk(v)
-
-        walk(e)
-        return found
+        if isinstance(e, A.Ident):
+            if e.qualifier is not None:
+                return e.qualifier not in sub_scope.frames
+            return e.name not in inner_cols
+        if isinstance(e, A.Wildcard):
+            return False
+        return any(
+            self._refs_outer(c, inner_cols, sub_scope) for c in A.children(e)
+        )
 
     def _lower_in_subquery(self, base, node: A.InSubquery, scope: Scope):
         sub_q = node.query
@@ -2567,24 +2443,15 @@ class Lowerer:
             if not any(e == seen for seen, _ in out):
                 out.append((e, f"__a{len(out)}"))
             return  # no nested aggregates in the dialect
-        if isinstance(e, (A.Lit, A.Param, A.Ident, A.Wildcard, A.Interval)):
+        if isinstance(e, A.Wildcard):
             return
         if isinstance(e, (A.ScalarSubquery, A.Exists, A.InSubquery,
                           A.QuantCompare)):
             # a subquery's aggregates belong to ITS OWN query block, not
             # the enclosing select — don't hoist them outward
             return
-        for f in getattr(e, "__dataclass_fields__", {}):
-            v = getattr(e, f)
-            if isinstance(v, list):
-                for x in v:
-                    if isinstance(x, tuple):
-                        for y in x:
-                            self._collect_aggs(y, out)
-                    elif hasattr(x, "__dataclass_fields__"):
-                        self._collect_aggs(x, out)
-            elif hasattr(v, "__dataclass_fields__"):
-                self._collect_aggs(v, out)
+        for c in A.children(e):
+            self._collect_aggs(c, out)
 
     def _lower_aggregate(self, base, q, agg_calls, scope):
         group_map: dict[int, str] = {}
@@ -2710,10 +2577,12 @@ class Lowerer:
                     c.name.lower() == "grouping" for c, _ in agg_calls
                 )
             ):
-                return self._lower_aggregate_split(
+                split = self._lower_aggregate_split(
                     base, q, dist_calls, reg_calls, scope, group_map,
                     group_cols, resolved_groups,
                 )
+                if split is not None:
+                    return split
         aggs: list[Column] = []
         for call, name in agg_calls:
             aggs.append(self._agg_expr(call, scope, q, group_map).alias(name))
@@ -2819,11 +2688,15 @@ class Lowerer:
         """Two aggregations over the same child — regular aggregates in
         one map-side-partial hash aggregate, distinct aggregates in
         their own Expand-bearing aggregate — joined back on null-safe
-        key equality (see the dispatch comment in _lower_aggregate)."""
+        key equality (see the dispatch comment in _lower_aggregate).
+        None when the child is nondeterministic (`WHERE rand() < …`):
+        its two evaluations would keep different rows."""
         from functools import reduce
 
         names = [group_map[i] for i in range(len(group_cols))]
         pre = base.select(F.col("*"), *group_cols) if group_cols else base
+        if not pre._jdf.queryExecution().analyzed().deterministic():
+            return None
 
         def agg_frame(calls):
             aggs = [
@@ -3910,16 +3783,9 @@ class Lowerer:
 
 def _refs_table(node, name: str) -> bool:
     """Does the (sub)tree reference table `name` in any FROM/JOIN?"""
-    if isinstance(node, A.TableRef):
-        return node.name == name
-    if isinstance(node, (str, int, float, bool, bytes)) or node is None:
-        return False
-    if isinstance(node, (list, tuple)):
-        return any(_refs_table(x, name) for x in node)
-    for f in getattr(node, "__dataclass_fields__", {}):
-        if _refs_table(getattr(node, f), name):
-            return True
-    return False
+    return any(
+        isinstance(n, A.TableRef) and n.name == name for n in A.walk(node)
+    )
 
 
 _AGG_NAMES = {n.lower() for n in AGGREGATE_FNS} | {

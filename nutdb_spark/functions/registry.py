@@ -1561,6 +1561,19 @@ SCALAR_FNS["randCanonical"] = F.rand
 SCALAR_FNS["randUniform"] = lambda a, b: a + F.rand() * (b - a)
 SCALAR_FNS["randNormal"] = lambda m, s: m + F.randn() * s
 
+# lowercase names of every per-row generator and wall-clock reader: a
+# call to one is never shared between occurrences (common-subexpression
+# binding) and never moved across a merge (view rewrite)
+NONDETERMINISTIC_FNS = frozenset(
+    {
+        "rand", "rand64", "randcanonical", "randconstant", "randuniform",
+        "randnormal", "random", "randomstring", "randomprintableascii",
+        "uuid", "generateuuidv4", "now", "now64", "today", "yesterday",
+        "currenttimestamp", "current_timestamp",
+        "monotonically_increasing_id", "rownumberinallblocks",
+    }
+)
+
 
 def _group_array_sorted(params: list, x: Column) -> Column:
     """groupArraySorted(n)(x) — the n smallest values ascending,

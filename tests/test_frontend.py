@@ -246,3 +246,38 @@ def test_multiset_setops_parse_and_precedence():
     assert st2.query.op == "intersect"
     st3 = parse("SELECT a FROM t EXCEPT DISTINCT SELECT b FROM u")
     assert st3.query.op == "except"
+
+
+def test_ast_traversal_reaches_every_container_shape():
+    """children / walk / transform see through node fields, lists,
+    lists of tuples, tuple fields and lists of lists alike, and
+    transform keeps each container's type."""
+    shapes = [
+        A.UnOp("not", A.Ident("a")),  # node field
+        A.InList(A.Ident("b"), [A.Ident("c")]),  # list
+        A.Case(None, [(A.Ident("d"), A.Ident("e"))], None),  # list of tuples
+        A.OrderItem(A.Ident("f"), fill=(A.Ident("g"), None, None)),  # tuple
+        A.ValuesTable([[A.Ident("h")], [A.Ident("i")]]),  # list of lists
+    ]
+    root = A.ArrayLit(list(shapes))
+    assert list(A.children(root)) == shapes
+    nodes = list(A.walk(root))
+    assert nodes[0] is root
+    assert [n.name for n in nodes if isinstance(n, A.Ident)] == list(
+        "abcdefghi"
+    )
+
+    def upper(n):
+        if isinstance(n, A.Ident):
+            return A.Ident(n.name.upper())
+        return A.transform(n, upper)
+
+    assert upper(root) is root
+    assert [n.name for n in A.walk(root) if isinstance(n, A.Ident)] == list(
+        "ABCDEFGHI"
+    )
+    _, _, case, order, values = root.items
+    assert isinstance(case.whens, list) and isinstance(case.whens[0], tuple)
+    assert isinstance(order.fill, tuple) and order.fill[1:] == (None, None)
+    assert isinstance(values.rows, list)
+    assert all(isinstance(r, list) for r in values.rows)

@@ -106,6 +106,28 @@ def test_merge_ambiguous_bare_column_errors(eng):
         )
 
 
+def test_merge_update_through_case(eng):
+    """Source references nested in CASE branches (tuples inside the
+    whens list) resolve like top-level ones."""
+    _mk(eng, "(1,'a',10), (2,'b',20)", "(2,'b',99)")
+    eng.sql(
+        "MERGE INTO mt USING ms AS s ON mt.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET "
+        "v = CASE WHEN s.v > 0 THEN s.v + 1 ELSE 0 END"
+    )
+    assert _rows(eng) == [(1, "a", 10), (2, "b", 100)]
+
+
+def test_merge_ambiguous_bare_column_inside_case_errors(eng):
+    _mk(eng, "(1,'a',10)", "(1,'a',1)")
+    with pytest.raises(CatalogError, match="ambiguous"):
+        eng.sql(
+            "MERGE INTO mt USING ms AS s ON mt.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET "
+            "v = CASE WHEN tag = 'a' THEN 1 ELSE 0 END"
+        )
+
+
 def test_merge_unknown_and_serial_columns_error(eng):
     eng.sql("CREATE TABLE mt (id Serial64, tag String, v Int64)")
     eng.sql("INSERT INTO mt (tag, v) VALUES ('a', 1)")
@@ -214,6 +236,12 @@ def test_merge_by_source_rejects_source_refs(eng):
         eng.sql(
             "MERGE INTO mt USING ms AS s ON mt.id = s.id "
             "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = s.v"
+        )
+    with pytest.raises(CatalogError, match="target columns only"):
+        eng.sql(
+            "MERGE INTO mt USING ms AS s ON mt.id = s.id "
+            "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET "
+            "v = CASE WHEN s.v > 0 THEN 1 ELSE 0 END"
         )
 
 

@@ -511,6 +511,28 @@ def test_agg_combinators_bounded_exchanges(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_split_aggregation_needs_deterministic_child(spark):
+    """The DISTINCT + heavyweight split evaluates its child twice and
+    inner-joins the two aggregates; under `WHERE rand() …` the two
+    evaluations keep different rows, so such a query lowers to one
+    aggregate with no join."""
+    import tempfile
+
+    from nutdb_spark.engine import NutEngine
+
+    eng = NutEngine(spark, data_dir=SF01, catalog_dir=tempfile.mkdtemp())
+    sql = (
+        "SELECT l_returnflag, uniqExact(l_partkey) AS u, "
+        "median(l_quantity) AS m FROM lineitem {} GROUP BY l_returnflag"
+    )
+    assert "Join" in plan_of(eng.sql(sql.format("")))
+    single = plan_of(eng.sql(sql.format("WHERE rand() <= 1.0")))
+    assert "Join" not in single
+    assert single.count("HashAggregate") + single.count(
+        "ObjectHashAggregate"
+    ) + single.count("SortAggregate") >= 1
+
+
 def test_pq_adc_no_cartesian_and_broadcast_rescore(spark):
     """topk_pq_adc: candidate generation is a cogroup over blocks
     (never a cartesian), and the exact rescore joins the tiny

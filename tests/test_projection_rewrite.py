@@ -264,13 +264,14 @@ def test_no_rewrite_after_detach(eng):
     assert _reads_view(_plan(df))
 
 
-def test_no_rewrite_on_nondeterministic_where(eng):
+@pytest.mark.parametrize("fn", ["rand()", "rand64()", "randCanonical()"])
+def test_no_rewrite_on_nondeterministic_where(eng, fn):
     """WHERE rand() < x must filter BASE rows, not merged view rows —
     a different result distribution. The rewrite must stand down on
     any nondeterministic call in WHERE or ORDER BY."""
     df = eng.sql(
         "SELECT region, sum(qty) AS q FROM pr_sales "
-        "WHERE rand() <= 1.0 GROUP BY region"
+        f"WHERE {fn} >= 0 GROUP BY region"
     )
     assert not _reads_view(_plan(df))
     # deterministic predicates keep firing
